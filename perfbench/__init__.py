@@ -1,0 +1,1 @@
+"""Per-change benchmark of the engine; entry point ``perfbench/run.py``."""

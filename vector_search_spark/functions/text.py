@@ -69,6 +69,17 @@ def stopword_ratio(text: Column | str, lang: str = "en") -> Column:
     )
 
 
+def lang_scores(text: Column | str) -> dict[str, Column]:
+    """Per-language stopword-hit rate (hits per whitespace token): the
+    language-ID heuristic takes the argmax, tie-break en > es > fr > de."""
+    t = _c(text)
+    n = token_count_ws(t).cast("double")
+    return {
+        lang: F.when(n == 0, F.lit(0.0)).otherwise(_word_hits(t, words).cast("double") / n)
+        for lang, words in STOPWORDS.items()
+    }
+
+
 def quality_score(text: Column | str, lang: str = "en") -> Column:
     """Heuristic document-quality score in [0,1] (cf. C4/Gopher-style rules):
 

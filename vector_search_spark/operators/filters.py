@@ -39,8 +39,3 @@ def date_range_filter(
     if null_passes:
         cond = F.col(date_col).isNull() | cond
     return df.filter(cond)
-
-
-def ordered_limit(df: DataFrame, order_col: str = "rerank_score", n: int = 10) -> DataFrame:
-    """Q6: top-n of the filtered survivors, ordered desc (post-filter limit)."""
-    return df.orderBy(F.desc(order_col)).limit(n)

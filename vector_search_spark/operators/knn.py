@@ -19,17 +19,15 @@ Scale design (the part that must survive 100 TB / 1000 executors):
   — the per-query top-k shuffle moves only (query_id, id, score) ≈ 24-byte
   rows, never the 1.5 KB embeddings.
 - Spark 4 plans ``row_number() <= k`` as ``WindowGroupLimit`` on BOTH sides
-  of the exchange (verified via .explain), i.e. native map-side
+  of the exchange (pinned by tests/test_knn_prune.py), i.e. native map-side
   per-partition top-k: the shuffle is already bounded at
-  ``num_partitions * |Q| * k`` narrow rows regardless of corpus size.
-  The Arrow-batched ``mapInPandas`` heap variant
-  (``prune_per_partition=True``) is kept only as a fallback knob for
-  engines without rank-limit pushdown; default path is pure JVM.
+  ``num_partitions * |Q| * k`` narrow rows regardless of corpus size, with
+  no Python worker in the plan.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator, Sequence
+from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -75,36 +73,6 @@ def knn_topk(
     )
 
 
-def _partition_topk_batches(k: int):
-    """mapInPandas body: per-(partition,query) top-k heap over narrow rows."""
-    import heapq
-
-    import pandas as pd
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        heaps: dict[object, list] = {}
-        for pdf in batches:
-            for qid, iid, score in zip(pdf["query_id"], pdf["__id"], pdf["score"]):
-                h = heaps.setdefault(qid, [])
-                # negate the id so score ties prefer the SMALLER id — the
-                # same total order the downstream window uses (desc score,
-                # asc id); otherwise a tied smaller-id row can be evicted
-                # here yet win globally
-                item = (score, -iid)
-                if len(h) < k:
-                    heapq.heappush(h, item)
-                elif item > h[0]:
-                    heapq.heapreplace(h, item)
-        rows = [
-            {"query_id": qid, "__id": -neg_iid, "score": s}
-            for qid, h in heaps.items()
-            for (s, neg_iid) in h
-        ]
-        yield pd.DataFrame(rows, columns=["query_id", "__id", "score"])
-
-    return fn
-
-
 def similarity_join(
     emb: DataFrame,
     queries: DataFrame,
@@ -114,7 +82,6 @@ def similarity_join(
     query_id_col: str = "query_id",
     query_vec_col: str = "query_vec",
     payload_cols: Sequence[str] | None = None,
-    prune_per_partition: bool = False,
 ) -> DataFrame:
     """Batched multi-query KNN: top-k matches per query row.
 
@@ -136,9 +103,6 @@ def similarity_join(
     )
     # Narrow projection BEFORE the exchange: never shuffle vectors.
     narrow = scored.select(F.col("query_id"), F.col(id_col).alias("__id"), F.col("score"))
-
-    if prune_per_partition:
-        narrow = narrow.mapInPandas(_partition_topk_batches(k), schema=narrow.schema)
 
     w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("__id"))
     topk = (

@@ -8,6 +8,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .artifacts import artifact, cached, persisted
 from .functions.scalar import round4
 from .operators.ann import ivf_build, ivf_query, srp_band_table, srp_planes, srp_topk
 from .registry import register
@@ -59,24 +60,11 @@ _SRP_ORACLE = f"""
 # refine + assignment) is the amortizable part — at 100 TB it's a persisted
 # partitionBy(cell) table; in-session a persisted DataFrame plays that role
 # so the registered query measures the QUERY path, not an index rebuild.
-_IVF_CACHE: dict[str, tuple] = {}
-
-
+@artifact
 def _shared_ivf_index(spark: SparkSession, sf_dir: str):
-    hit = _IVF_CACHE.get(sf_dir)
-    if hit is not None and hit[0] is spark:
-        return hit[1], hit[2]
-    if hit is not None:
-        try:
-            hit[2].unpersist()
-        except Exception:
-            pass  # old session already stopped
     emb = __load(spark, sf_dir, "embeddings")
     cent_mat, indexed = ivf_build(emb, n_centroids=16, replicas=2)
-    indexed = indexed.persist()
-    indexed.count()
-    _IVF_CACHE[sf_dir] = (spark, cent_mat, indexed)
-    return cent_mat, indexed
+    return cent_mat, persisted(indexed)
 
 
 @register(
@@ -232,28 +220,17 @@ def q_ann_ivf_probe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # SRP band-bucket index cache per (session, sf_dir) — same amortized-index
-# model as _IVF_CACHE: the 16 hyperplane-projection folds over the corpus
+# model as the IVF index: the 16 hyperplane-projection folds over the corpus
 # are the build cost (a partitionBy(band) parquet at scale); the registered
 # query times banding 20 query vectors + candidate join + exact rescore.
-_SRP_CACHE: dict[str, tuple] = {}
-
-
+@artifact
 def _shared_srp_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    hit = _SRP_CACHE.get(sf_dir)
-    if hit is not None and hit[0] is spark:
-        return hit[1]
-    if hit is not None:
-        try:
-            hit[1].unpersist()
-        except Exception:
-            pass  # old session already stopped
     emb = __load(spark, sf_dir, "embeddings")
-    ib = srp_band_table(
-        emb, "vec_id", "embedding", _SRP_BITS, _SRP_BANDS, dim=_SRP_DIM, spread=True
-    ).persist()
-    ib.count()
-    _SRP_CACHE[sf_dir] = (spark, ib)
-    return ib
+    return persisted(
+        srp_band_table(
+            emb, "vec_id", "embedding", _SRP_BITS, _SRP_BANDS, dim=_SRP_DIM, spread=True
+        )
+    )
 
 
 @register("ann_srp_topk", oracle=_SRP_ORACLE)
@@ -346,26 +323,13 @@ def q_media_sampling_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
 # SQ code-table cache per (session, sf_dir) — same amortized-index model:
 # quantization constants + int8 codes are the build (a packed-bytes parquet
 # at scale); the registered query times approximate scan + exact rescore.
-_SQ_CACHE: dict[str, tuple] = {}
-
-
+@artifact
 def _shared_sq_index(spark: SparkSession, sf_dir: str):
-    hit = _SQ_CACHE.get(sf_dir)
-    if hit is not None and hit[0] is spark:
-        return hit[1], hit[2], hit[3]
-    if hit is not None:
-        try:
-            hit[3].unpersist()
-        except Exception:
-            pass  # old session already stopped
     from .operators.ann import sq_code_table, sq_stats
 
     emb = __load(spark, sf_dir, "embeddings")
     mins, scales = sq_stats(emb)
-    codes = sq_code_table(emb, mins, scales).persist()
-    codes.count()
-    _SQ_CACHE[sf_dir] = (spark, mins, scales, codes)
-    return mins, scales, codes
+    return mins, scales, persisted(sq_code_table(emb, mins, scales))
 
 
 _SQ_ORACLE = """
@@ -514,42 +478,36 @@ def _srpw_band_bits(n: int) -> int:
     return min(_SRPW_MAX_BB, max(_SRPW_MIN_BB, n.bit_length() - 4))
 
 
-_SRPW_CACHE: dict[str, tuple] = {}
-
-
+@artifact
 def _shared_srpw_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    hit = _SRPW_CACHE.get(sf_dir)
-    if hit is not None and hit[0] is spark:
-        return hit[1]
-    if hit is not None:
-        try:
-            hit[1].unpersist()
-        except Exception:
-            pass
     emb = __load(spark, sf_dir, "embeddings")
     # One count() prices the corpus at index-build time (cheap parquet
     # metadata scan) — exactly how dedup.py's cosine blocking sizes its
     # buckets.  Unlike bucket count there, band width DOES change the
     # result set; the oracle derives the identical value from COUNT(*).
-    # The count is CACHED alongside the index (round 11, VERDICT r10
+    # The count is CACHED next to the index (round 11, VERDICT r10
     # "what's wrong" #3): the SRP consumers' maybe_broadcast gates used
     # to re-count the raw embeddings projection on every query build —
     # an extra corpus scan per run at any scale.
-    n = emb.count()
-    ib = srp_band_table(
-        emb, "vec_id", "embedding", _SRPW_BANDS * _srpw_band_bits(n), _SRPW_BANDS,
-        seed="srpw", dim=_SRP_DIM, spread=True,
-    ).persist()
-    ib.count()
-    _SRPW_CACHE[sf_dir] = (spark, ib, n)
-    return ib
+    n = _srpw_corpus_count(spark, sf_dir, emb)
+    return persisted(
+        srp_band_table(
+            emb, "vec_id", "embedding", _SRPW_BANDS * _srpw_band_bits(n), _SRPW_BANDS,
+            seed="srpw", dim=_SRP_DIM, spread=True,
+        )
+    )
 
 
-def _srpw_corpus_count(spark: SparkSession, sf_dir: str) -> int:
-    """The embeddings COUNT(*) already paid by `_shared_srpw_index` —
-    consumers size their broadcast gates from this instead of re-scanning."""
-    _shared_srpw_index(spark, sf_dir)
-    return _SRPW_CACHE[sf_dir][2]
+def _srpw_corpus_count(
+    spark: SparkSession, sf_dir: str, emb: DataFrame | None = None
+) -> int:
+    """The embeddings COUNT(*) that sizes `_shared_srpw_index` — counted
+    once per (session, sf_dir); consumers size their broadcast gates from
+    this instead of re-scanning."""
+    return cached(
+        spark, "_srpw_corpus_count", sf_dir,
+        lambda: (__load(spark, sf_dir, "embeddings") if emb is None else emb).count(),
+    )
 
 
 @register(
@@ -823,29 +781,14 @@ def _pq_oracle() -> str:
     """
 
 
-_PQ_CACHE: dict[str, tuple] = {}
-
-
+@artifact
 def _shared_pq_index(spark: SparkSession, sf_dir: str):
     """(codebook, codes) — build-once artifact like the IVF/SRP/SQ caches;
     at scale the codes table is the 8-bytes-per-vector packed index one
     materializes next to the corpus."""
-    hit = _PQ_CACHE.get(sf_dir)
-    if hit is not None and hit[0] is spark:
-        return hit[1], hit[2]
-    if hit is not None:
-        for t in hit[1:]:
-            try:
-                t.unpersist()
-            except Exception:
-                pass
     emb = __load(spark, sf_dir, "embeddings")
-    cb = pq_codebook(emb).persist()
-    cb.count()
-    codes = pq_encode(emb, cb).persist()
-    codes.count()
-    _PQ_CACHE[sf_dir] = (spark, cb, codes)
-    return cb, codes
+    cb = persisted(pq_codebook(emb))
+    return cb, persisted(pq_encode(emb, cb))
 
 
 @register("ann_pq_topk", oracle=_pq_oracle())

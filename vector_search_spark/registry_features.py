@@ -25,6 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .artifacts import cached
 from .functions.scalar import round4
 from .registry import register
 from .sources.tables import load_table as __load
@@ -664,10 +665,8 @@ def q_markov_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     size-free.  The plan compiles ~300 generated columns, so it is served
     from the prepared-statement cache like the other unrolled iterations.
     """
-    from .registry_ml import _plan_cached
-
-    return _plan_cached(
-        "markov_attribution", spark, sf_dir, lambda: _ma_plan(spark, sf_dir)
+    return cached(
+        spark, "markov_attribution", sf_dir, lambda: _ma_plan(spark, sf_dir)
     )
 
 
@@ -1263,10 +1262,8 @@ def q_markov_entropy_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     cells, corpus-size-free iteration; the entropy layer is pure scalar
     text on the 1-row frame.  Plan-cached like the other unrolled plans.
     """
-    from .registry_ml import _plan_cached
-
-    return _plan_cached(
-        "markov_entropy_rate", spark, sf_dir, lambda: _me_plan(spark, sf_dir)
+    return cached(
+        spark, "markov_entropy_rate", sf_dir, lambda: _me_plan(spark, sf_dir)
     )
 
 

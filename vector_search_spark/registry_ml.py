@@ -37,6 +37,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .artifacts import cached
 from .functions.scalar import round4
 from .registry import register
 from .sources.tables import load_table as __load
@@ -442,7 +443,7 @@ def q_markov_stationary_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     def build() -> DataFrame:
         return _markov_plan(spark, sf_dir)
 
-    return _plan_cached("markov_stationary_events", spark, sf_dir, build)
+    return cached(spark, "markov_stationary_events", sf_dir, build)
 
 
 def _markov_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -705,17 +706,9 @@ def q_nb_lang_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
 # DataFrame (measured: bootstrap 4.3 s/call rebuilt vs 0.1 s re-collected).
 # A DataFrame object caches its optimized/physical plan, so returning the
 # same object per (session, sf_dir) amortizes compile exactly like a
-# prepared statement — no DATA is cached; every collect re-executes.
-_PLAN_CACHE: dict[tuple[int, str, str], DataFrame] = {}
-
-
-def _plan_cached(name: str, spark: SparkSession, sf_dir: str, build):
-    key = (id(spark), sf_dir, name)
-    df = _PLAN_CACHE.get(key)
-    if df is None:
-        df = build()
-        _PLAN_CACHE[key] = df
-    return df
+# prepared statement — no DATA is cached; every collect re-executes.  The
+# plans live in the session-shared artifact store (`artifacts.cached`, a
+# new session replaces them); they are per-query, not setup builders.
 
 
 # ---------------------------------------------------------------------------
@@ -801,7 +794,7 @@ def q_bootstrap_value_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     def build() -> DataFrame:
         return _bootstrap_plan(spark, sf_dir)
 
-    return _plan_cached("bootstrap_value_ci", spark, sf_dir, build)
+    return cached(spark, "bootstrap_value_ci", sf_dir, build)
 
 
 def _bootstrap_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1729,7 +1722,7 @@ def q_kmeans_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     def build() -> DataFrame:
         return _kmeans_plan(spark, sf_dir)
 
-    return _plan_cached("kmeans_lineitem", spark, sf_dir, build)
+    return cached(spark, "kmeans_lineitem", sf_dir, build)
 
 
 def _kmeans_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1911,7 +1904,7 @@ def q_svd_rank1_affinity(spark: SparkSession, sf_dir: str) -> DataFrame:
     def build() -> DataFrame:
         return _svd_plan(spark, sf_dir)
 
-    return _plan_cached("svd_rank1_affinity", spark, sf_dir, build)
+    return cached(spark, "svd_rank1_affinity", sf_dir, build)
 
 
 def _svd_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2067,7 +2060,7 @@ def q_ab_bootstrap_diff_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     def build() -> DataFrame:
         return _abb_plan(spark, sf_dir)
 
-    return _plan_cached("ab_bootstrap_diff_ci", spark, sf_dir, build)
+    return cached(spark, "ab_bootstrap_diff_ci", sf_dir, build)
 
 
 def _abb_plan(spark: SparkSession, sf_dir: str) -> DataFrame:

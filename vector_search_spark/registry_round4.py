@@ -28,6 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .artifacts import artifact, cached, persisted
 from .functions.scalar import round4
 from .registry import register
 from .sources.tables import load_table as __load
@@ -1083,30 +1084,15 @@ def _ivfpq_oracle() -> str:
     """
 
 
-_IVFPQ_CACHE: dict[str, tuple] = {}
-
-
+@artifact
 def _shared_ivfpq_coarse(spark: SparkSession, sf_dir: str):
     """(cents, assign) — the coarse half of the IVF-PQ index; the fine
     half (codebook + codes) is registry_extensions._shared_pq_index.  At
     scale `assign` is the physical partitioning of the code table
     (write.partitionBy(cell)), built once per corpus snapshot."""
-    hit = _IVFPQ_CACHE.get(sf_dir)
-    if hit is not None and hit[0] is spark:
-        return hit[1], hit[2]
-    if hit is not None:
-        for t in hit[1:]:
-            try:
-                t.unpersist()
-            except Exception:
-                pass
     emb = __load(spark, sf_dir, "embeddings")
-    cents = coarse_cells(emb).persist()
-    cents.count()
-    assign = coarse_assign(emb, cents).persist()
-    assign.count()
-    _IVFPQ_CACHE[sf_dir] = (spark, cents, assign)
-    return cents, assign
+    cents = persisted(coarse_cells(emb))
+    return cents, persisted(coarse_assign(emb, cents))
 
 
 @register("ann_ivfpq_topk", oracle=_ivfpq_oracle())
@@ -1238,33 +1224,18 @@ def _ivfpq_residual_oracle() -> str:
     """
 
 
-_IVFPQ_RES_CACHE: dict[str, tuple] = {}
-
-
+@artifact
 def _shared_ivfpq_residual_index(spark: SparkSession, sf_dir: str):
     """(rcb, rcodes) — the residual fine half of the IVF-PQ index: PQ
     codebook sampled from RESIDUAL rows (seed 'pqr:') and per-vector
     residual codes.  Built once per corpus snapshot, like the coarse half."""
-    hit = _IVFPQ_RES_CACHE.get(sf_dir)
-    if hit is not None and hit[0] is spark:
-        return hit[1], hit[2]
-    if hit is not None:
-        for t in hit[1:]:
-            try:
-                t.unpersist()
-            except Exception:
-                pass
     from .operators.ann import pq_encode, residual_codebook, residual_table
 
     emb = __load(spark, sf_dir, "embeddings")
     cents, assign = _shared_ivfpq_coarse(spark, sf_dir)
     resid = residual_table(emb, cents, assign)
-    rcb = residual_codebook(resid).persist()
-    rcb.count()
-    rcodes = pq_encode(resid, rcb, vec_col="rvec").persist()
-    rcodes.count()
-    _IVFPQ_RES_CACHE[sf_dir] = (spark, rcb, rcodes)
-    return rcb, rcodes
+    rcb = persisted(residual_codebook(resid))
+    return rcb, persisted(pq_encode(resid, rcb, vec_col="rvec"))
 
 
 @register("ann_ivfpq_residual_topk", oracle=_ivfpq_residual_oracle())
@@ -1496,10 +1467,7 @@ def q_pca_top_component(spark: SparkSession, sf_dir: str) -> DataFrame:
     while near-isotropic synthetic embeddings (ratio ~1.06) would need
     ~70 rounds — the classic convergence caveat, documented not hidden.
     """
-    from .registry_ml import _plan_cached
-
-    return _plan_cached("pca_top_component", spark, sf_dir,
-                        lambda: _pca_plan(spark, sf_dir))
+    return cached(spark, "pca_top_component", sf_dir, lambda: _pca_plan(spark, sf_dir))
 
 
 def _pca_plan(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -29,6 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .artifacts import artifact, cached
 from .functions.scalar import round4
 from .registry import register
 from .registry_dedup import (
@@ -38,6 +39,7 @@ from .registry_dedup import (
     _SQL_SHINGLES,
     _SQL_SIG,
     _SQL_VERIFIED_BLOCK,
+    _shared_sym_edges,
 )
 from .sources.tables import load_table as __load
 
@@ -79,19 +81,12 @@ def _lpa_round_sql(prev: str, cur: str) -> str:
       WHERE rn = 1)"""
 
 
-_LPA_CACHE: dict[str, tuple] = {}
-
-
+@artifact
 def _shared_lpa_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Final (doc_id, label) table of the fixed-round synchronous LPA —
     session-shared (round 11): both `dup_label_propagation` and
     `dup_community_modularity` ran the full 4-round loop independently.
     The loop's last round already ends in an eager localCheckpoint."""
-    hit = _LPA_CACHE.get(sf_dir)
-    if hit is not None and hit[0] is spark:
-        return hit[1]
-    from .registry_dedup import _shared_sym_edges
-
     edges = _shared_sym_edges(spark, sf_dir)
     labels = edges.select(F.col("a").alias("doc_id")).distinct().withColumn(
         "label", F.col("doc_id").cast("long")
@@ -109,7 +104,6 @@ def _shared_lpa_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select(F.col("b").alias("doc_id"), "label")
             .localCheckpoint(eager=True)
         )
-    _LPA_CACHE[sf_dir] = (spark, labels)
     return labels
 
 
@@ -212,8 +206,6 @@ def q_dup_eigencentrality(spark: SparkSession, sf_dir: str) -> DataFrame:
     ~1e12-node graphs (score ≤ N·1e6); beyond that the accumulator moves
     to DECIMAL(38,0) per the house second-moment rule.
     """
-    from .registry_dedup import _shared_sym_edges
-
     edges = _shared_sym_edges(spark, sf_dir)
     nodes = edges.select(F.col("a").alias("doc_id")).distinct()
     nn = nodes.agg(F.count(F.lit(1)).cast("long").alias("n_nodes"))
@@ -825,8 +817,6 @@ def q_pca_second_component(spark: SparkSession, sf_dir: str) -> DataFrame:
     1-row localCheckpoint between phases is the house codegen barrier
     (>64 KB generated methods fall back to interpreted eval).
     """
-    from .registry_ml import _plan_cached
-
     def build() -> DataFrame:
         from .registry_round4 import (
             _PCA_D,
@@ -901,7 +891,7 @@ def q_pca_second_component(spark: SparkSession, sf_dir: str) -> DataFrame:
             "dim"
         )
 
-    return _plan_cached("pca_second_component", spark, sf_dir, build)
+    return cached(spark, "pca_second_component", sf_dir, build)
 
 
 
@@ -1132,8 +1122,6 @@ def q_svd_rank2_affinity(spark: SparkSession, sf_dir: str) -> DataFrame:
     rounds exceed the 64 KB method limit, so a 1-row eager
     localCheckpoint barrier lands every 8 rounds (house lesson).
     """
-    from .registry_ml import _plan_cached
-
     def build() -> DataFrame:
         s = _SVD2_SCALE
         ev = _t(spark, sf_dir, "events")
@@ -1237,7 +1225,7 @@ def q_svd_rank2_affinity(spark: SparkSession, sf_dir: str) -> DataFrame:
             "r.v1_dot_v2",
         ).orderBy("event_type")
 
-    return _plan_cached("svd_rank2_affinity", spark, sf_dir, build)
+    return cached(spark, "svd_rank2_affinity", sf_dir, build)
 
 
 # ---------------------------------------------------------------------------

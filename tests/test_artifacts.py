@@ -10,7 +10,7 @@ import pytest
 from conftest import SF_SMOKE
 from vector_search_spark import artifacts, registry  # noqa: F401  (registers builders)
 from vector_search_spark.registry_dedup import _shared_shingles
-from vector_search_spark.registry_extensions import _shared_pq_index
+from vector_search_spark.registry_ann import _shared_pq_index
 
 SETUP_BUILDERS = {
     "_ps", "_shared_shingles", "_shared_signatures", "_shared_simhash_sigs",

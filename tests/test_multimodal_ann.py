@@ -7,7 +7,11 @@ import pytest
 from pyspark.sql import functions as F
 
 from conftest import SF_TEST
-from vector_search_spark.operators.ann import ivf_topk
+from vector_search_spark.operators.ann import (
+    ivf_build,
+    ivf_probe_sweep_topk,
+    ivf_query,
+)
 from vector_search_spark.operators.knn import similarity_join
 from vector_search_spark.operators.multimodal import (
     attach_binary_payload,
@@ -68,7 +72,8 @@ def test_ivf_recall_vs_exact(spark):
     # fixture vectors are near-random (IVF's worst case) — nprobe/replicas
     # are set high here; clustered real embeddings reach 0.9+ at far lower
     # probe fractions
-    approx = ivf_topk(emb, queries, k=10, n_centroids=16, nprobe=8, replicas=2)
+    cent_mat, indexed = ivf_build(emb, n_centroids=16, replicas=2)
+    approx = ivf_query(indexed, cent_mat, queries, k=10, nprobe=8)
     e = {(r["query_id"], r["vec_id"]) for r in exact.collect()}
     a = {(r["query_id"], r["vec_id"]) for r in approx.collect()}
     recall = len(e & a) / len(e)
@@ -79,6 +84,34 @@ def test_ivf_recall_vs_exact(spark):
         key = (r["query_id"], r["vec_id"])
         if key in ex_scores:
             assert abs(ex_scores[key] - r["score"]) < 1e-9
+
+
+def test_ivf_empty_query_batch_returns_empty_frames(spark):
+    emb = spark.read.parquet(f"{SF_TEST}/embeddings.parquet")
+    cent_mat, indexed = ivf_build(emb, n_centroids=16, replicas=2)
+    none = emb.filter(F.col("vec_id") < 0).select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
+    )
+    top = ivf_query(indexed, cent_mat, none, k=10, nprobe=4)
+    assert top.columns == ["query_id", "vec_id", "score", "rank"]
+    assert top.collect() == []
+    legs = ivf_probe_sweep_topk(indexed, cent_mat, none, sweep=(1, 4), k=10)
+    assert legs.columns == ["nprobe", "query_id", "vec_id", "score", "rank"]
+    assert legs.collect() == []
+
+
+def test_ivf_build_on_corpus_smaller_than_replicas(spark):
+    emb = spark.read.parquet(f"{SF_TEST}/embeddings.parquet").filter(
+        F.col("vec_id") == 0
+    )
+    cent_mat, indexed = ivf_build(emb, n_centroids=16, replicas=2)
+    assert cent_mat.shape[0] == 1
+    assert [(r["vec_id"], r["cell"]) for r in indexed.collect()] == [(0, 0)]
+    queries = emb.select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
+    )
+    hit = ivf_query(indexed, cent_mat, queries, k=10, nprobe=4).collect()
+    assert [(r["query_id"], r["vec_id"], r["rank"]) for r in hit] == [(0, 0, 1)]
 
 
 def test_srp_recall_vs_exact(spark):

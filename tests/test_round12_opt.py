@@ -53,26 +53,35 @@ def test_global_dense_rank_matches_reference_dense_rank(spark):
         }
         assert got == ref, f"num_ranges={num_ranges}"
 
-    # two-column keys with ties on the first column
-    rows2 = [(a, b, i) for i, (a, b) in enumerate(
-        itertools.product(range(6), range(5)) ) for _ in (0,)]
-    df2 = spark.createDataFrame(rows2, "a int, b int, tid int")
-    got2 = {
-        (r.a, r.b, r.tid): r["__dense"]
-        for r in global_dense_rank(df2, ["a", "b"], ["tid"], num_ranges=4).collect()
-    }
+    # two-column keys with ties on the first column; each (a, b) group
+    # holds 1-4 rows, so groups are genuinely composite
+    rows2 = [
+        (a, b)
+        for a, b in itertools.product(range(6), range(5))
+        for _ in range((a * b) % 4 + 1)
+    ]
+    df2 = spark.createDataFrame(
+        [(a, b, tid) for tid, (a, b) in enumerate(rows2)], "a int, b int, tid int"
+    ).repartition(7)
     ref2 = {
         (r.a, r.b, r.tid): r.ref
         for r in df2.withColumn(
             "ref", F.dense_rank().over(Window.orderBy("a", "b"))
         ).collect()
     }
-    assert got2 == ref2
+    for num_ranges in (1, 3, 32):
+        got2 = {
+            (r.a, r.b, r.tid): r["__dense"]
+            for r in global_dense_rank(
+                df2, ["a", "b"], ["tid"], num_ranges=num_ranges
+            ).collect()
+        }
+        assert got2 == ref2, f"num_ranges={num_ranges}"
 
 
 def test_probe_sweep_legs_equal_single_leg_ivf_query(spark):
     from vector_search_spark.operators.ann import ivf_probe_sweep_topk, ivf_query
-    from vector_search_spark.registry_extensions import _shared_ivf_index
+    from vector_search_spark.registry_ann import _shared_ivf_index
 
     cent_mat, indexed = _shared_ivf_index(spark, SF_SMOKE)
     queries = (

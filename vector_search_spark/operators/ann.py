@@ -67,6 +67,9 @@ def _assign_cells(
     top-r cells (IVF replication: r× storage for higher recall — valuable
     when the corpus is weakly clustered)."""
 
+    # a corpus or centroid count below ``replicas`` leaves fewer cells
+    replicas = min(replicas, len(cent_mat))
+
     def assign(batches):
         for pdf in batches:
             if len(pdf) == 0:
@@ -116,9 +119,12 @@ def kmeans_refine(
                 np.add.at(sums, cells, m)
                 counts += np.bincount(cells, minlength=n_cells)
             nz = np.flatnonzero(counts)
-            yield pd.DataFrame(
-                {"cell": nz.astype(np.int32), "s": list(sums[nz]), "n": counts[nz]}
-            )
+            # an empty task (a corpus smaller than the fan-out) emits no
+            # rows: Arrow cannot type an empty "s" column as array<double>
+            if nz.size:
+                yield pd.DataFrame(
+                    {"cell": nz.astype(np.int32), "s": list(sums[nz]), "n": counts[nz]}
+                )
 
         rows = emb.mapInPandas(partial, schema="cell int, s array<double>, n long").collect()
         agg_s = np.zeros((n_cells, dim))
@@ -185,6 +191,30 @@ def ivf_read_index(spark, path: str) -> DataFrame:
     return spark.read.parquet(path)
 
 
+def _probe_model(
+    queries: DataFrame,
+    cent_mat: np.ndarray,
+    nprobe: int,
+    query_id_col: str,
+    query_vec_col: str,
+) -> list[tuple[int, list, int, int]]:
+    """(query_id, query_vec, cell, probe_rank) for each query's top-``nprobe``
+    cells by dot product with the centroids, probe_rank 1 = best.  Queries
+    are small: driver-side numpy keeps the plan free of a second UDF stage.
+    ``ivf_query`` and ``ivf_probe_sweep_topk`` both probe through here, so
+    their candidate sets cannot drift apart."""
+    qrows = queries.select(query_id_col, query_vec_col).collect()
+    qmat = np.array(
+        [r[query_vec_col] for r in qrows], dtype=np.float64
+    ).reshape(len(qrows), cent_mat.shape[1])
+    order = np.argsort(-(qmat @ cent_mat.T), axis=1)[:, :nprobe]
+    return [
+        (int(r[query_id_col]), list(r[query_vec_col]), int(c), rk + 1)
+        for r, cells in zip(qrows, order)
+        for rk, c in enumerate(cells)
+    ]
+
+
 def ivf_query(
     indexed: DataFrame,
     cent_mat: np.ndarray,
@@ -197,20 +227,14 @@ def ivf_query(
     query_vec_col: str = "query_vec",
 ) -> DataFrame:
     """Query an IVF index built by ``ivf_build``: probe ``nprobe`` cells per
-    query, exact scoring inside the probed cells only."""
-    # per-query probe list (queries are small: driver-side numpy is fine and
-    # keeps the plan free of a second UDF stage)
-    qrows = queries.select(query_id_col, query_vec_col).collect()
-    qmat = np.array([r[query_vec_col] for r in qrows], dtype=np.float64)
-    probe_cells = np.argsort(-(qmat @ cent_mat.T), axis=1)[:, :nprobe]
-    probes = [
-        (int(r[query_id_col]), list(r[query_vec_col]), int(c))
-        for r, cells in zip(qrows, probe_cells)
-        for c in cells
-    ]
+    query, exact scoring inside the probed cells only.
+
+    Returns (query_id, id, score, rank) — same contract as
+    ``knn.similarity_join`` so callers can swap exact↔ANN."""
+    probes = _probe_model(queries, cent_mat, nprobe, query_id_col, query_vec_col)
     probes_df = F.broadcast(
         indexed.sparkSession.createDataFrame(
-            probes, f"query_id long, __qvec array<double>, cell int"
+            [p[:3] for p in probes], "query_id long, __qvec array<double>, cell int"
         )
     )
 
@@ -221,7 +245,7 @@ def ivf_query(
     # tests/test_ivf_persisted_index.py pins it), and in-session it is a
     # pushed-down predicate.  Results are unchanged (the equi-join on cell
     # already restricts); this moves the restriction from post-scan to scan.
-    cells_used = sorted({int(c) for c in probe_cells.ravel()})
+    cells_used = sorted({p[2] for p in probes})
     indexed = indexed.filter(F.col("cell").isin(cells_used))
 
     scored = indexed.join(probes_df, "cell").withColumn(
@@ -253,9 +277,8 @@ def ivf_probe_sweep_topk(
 ) -> DataFrame:
     """All ``nprobe`` legs of an IVF probe sweep from ONE scored pass.
 
-    Each query's top-``max(sweep)`` cells are ranked once (same driver-side
-    probe model as ``ivf_query`` — shared here so the two paths cannot
-    desynchronize, ADVICE r11); every probed cell is scored once carrying
+    Each query's top-``max(sweep)`` cells are ranked once (the probe model
+    ``ivf_query`` uses); every probed cell is scored once carrying
     its probe rank; a candidate's ENTRY level is its minimum probe rank
     over containing cells, and leg ``n`` is the ``entry <= n`` filter.  A
     candidate enters leg n iff one of its cells is among the query's top-n
@@ -266,14 +289,7 @@ def ivf_probe_sweep_topk(
 
     Returns (nprobe, query_id, id, score, rank) for rank <= k.
     """
-    qrows = queries.select(query_id_col, query_vec_col).collect()
-    qmat = np.array([r[query_vec_col] for r in qrows], dtype=np.float64)
-    order = np.argsort(-(qmat @ cent_mat.T), axis=1)[:, : max(sweep)]
-    probes = [
-        (int(r[query_id_col]), list(r[query_vec_col]), int(c), rk + 1)
-        for r, cells in zip(qrows, order)
-        for rk, c in enumerate(cells)
-    ]
+    probes = _probe_model(queries, cent_mat, max(sweep), query_id_col, query_vec_col)
     probes_df = F.broadcast(
         indexed.sparkSession.createDataFrame(
             probes, "query_id long, __qvec array<double>, cell int, probe_rank int"
@@ -301,34 +317,6 @@ def ivf_probe_sweep_topk(
         legs.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
         .select("nprobe", "query_id", id_col, "score", "rank")
-    )
-
-
-def ivf_topk(
-    emb: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    n_centroids: int = 16,
-    nprobe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "query_vec",
-    kmeans_iterations: int = 1,
-    replicas: int = 2,
-) -> DataFrame:
-    """Build + query in one call (convenience; amortize with ``ivf_build``
-    + ``ivf_query`` when the index outlives a single query batch).
-
-    Returns (query_id, id, score, rank) — same contract as
-    ``knn.similarity_join`` so callers can swap exact↔ANN.
-    """
-    cent_mat, indexed = ivf_build(
-        emb, n_centroids, id_col, vec_col, kmeans_iterations, replicas
-    )
-    return ivf_query(
-        indexed, cent_mat, queries, k, nprobe,
-        id_col, vec_col, query_id_col, query_vec_col,
     )
 
 
@@ -647,24 +635,31 @@ def _sub(col, s: int):
     return F.slice(col, s * PQ_SD + 1, PQ_SD)
 
 
-def pq_codebook(emb: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
-    """(code, cvec): the PQ_CODES vectors with smallest (md5(id), id) —
-    same reproducible order-statistics sample as ``ivf_centroids``;
-    TakeOrderedAndProject, then a window over the surviving rows only."""
+def _hash_sample(
+    df: DataFrame, key, n: int, id_col: str, vec_col: str, idx_col: str, out_col: str
+) -> DataFrame:
+    """(idx_col, out_col): the ``n`` rows of ``df`` with smallest (key, id),
+    numbered 0..n-1 in that order — a reproducible order-statistics sample
+    (uniform because the md5 key is).  TakeOrderedAndProject (per-partition
+    top-n + n-row driver merge), then a window over the n survivors only;
+    the same rows as DuckDB's ``ORDER BY key, id LIMIT n`` numbered by
+    ``row_number() OVER ()``."""
     return (
-        emb.select(F.col(id_col), F.col(vec_col))
-        .orderBy(F.md5(F.col(id_col).cast("string")), F.col(id_col))
-        .limit(PQ_CODES)
+        df.select(F.col(id_col), F.col(vec_col), key.alias("__k"))
+        .orderBy("__k", id_col)
+        .limit(n)
         .select(
-            (
-                F.row_number().over(
-                    Window.orderBy(F.md5(F.col(id_col).cast("string")), F.col(id_col))
-                )
-                - 1
-            ).alias("code"),
-            F.col(vec_col).alias("cvec"),
+            (F.row_number().over(Window.orderBy("__k", id_col)) - 1).alias(idx_col),
+            F.col(vec_col).alias(out_col),
         )
     )
+
+
+def pq_codebook(emb: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
+    """(code, cvec): the PQ_CODES vectors with smallest (md5(id), id) —
+    the same md5(id) order ``ivf_centroids`` samples by."""
+    key = F.md5(F.col(id_col).cast("string"))
+    return _hash_sample(emb, key, PQ_CODES, id_col, vec_col, "code", "cvec")
 
 
 def pq_encode(emb: DataFrame, codebook: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
@@ -703,33 +698,16 @@ def pq_encode(emb: DataFrame, codebook: DataFrame, id_col: str = "vec_id", vec_c
     return dists.groupBy(id_col).agg(*aggs)
 
 
-def pq_topk(
-    emb: DataFrame,
-    codes: DataFrame,
-    codebook: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    rescore: int = PQ_RESCORE,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Asymmetric-distance PQ search: per query a PQ_SUB×PQ_CODES LUT of
-    qsub·csub dot products (tiny, broadcast), approximate score =
-    l0+…+l{PQ_SUB-1} looked up by each vector's codes, top-``rescore``
-    per query (WindowGroupLimit), exact dot-product rescore, top-k.
-
-    Scale: vectors are touched only (a) once at encode time and (b) for
-    the |queries|·rescore exact rescores — the approximate scan reads the
-    PQ_SUB-byte codes, an 8-byte-per-vector scan where the raw corpus is
-    256 bytes/vector, the classic PQ memory story.  All joins against
-    LUT/codebook/queries broadcast; candidates are narrow id rows."""
-    qids = queries.select(F.col(id_col).alias("qid"), F.col(vec_col).alias("qvec"))
-    # LONG-form lookup: one (s, code)-keyed broadcast join instead of
-    # PQ_SUB chained joins — a chain of per-subspace joins invites the
-    # optimizer to pair the LUT relations with each other first (they
-    # only constrain through the codes row), a combinatorial blow-up the
-    # long form makes impossible by construction.
-    lut_long = (
+# ADC (asymmetric distance computation), shared by the three PQ searches.
+# LONG forms: one (s, code)-keyed broadcast join instead of PQ_SUB chained
+# joins — a chain of per-subspace joins invites the optimizer to pair the
+# LUT relations with each other first (they only constrain through the
+# codes row), a combinatorial blow-up the long form makes impossible by
+# construction.
+def _lut_long(qids: DataFrame, codebook: DataFrame) -> DataFrame:
+    """(qid, s, code, l): per query the PQ_SUB × PQ_CODES lookup table of
+    qsub·csub dot products (tiny, broadcast by the callers)."""
+    return (
         qids.crossJoin(F.broadcast(codebook))
         .select(
             "qid",
@@ -750,7 +728,11 @@ def pq_topk(
         )
         .select("qid", F.col("sl.s").alias("s"), "code", F.col("sl.l").alias("l"))
     )
-    codes_long = codes.select(
+
+
+def _codes_long(codes: DataFrame, id_col: str) -> DataFrame:
+    """(id, s, code): one row per (vector, subspace) of a ``pq_encode`` table."""
+    return codes.select(
         id_col,
         F.explode(
             F.array(
@@ -761,20 +743,31 @@ def pq_topk(
             )
         ).alias("sc"),
     ).select(id_col, F.col("sc.s").alias("s"), F.col("sc.code").alias("code"))
-    # fixed-order fold (sort by subspace, then add) — bit-identical to the
-    # oracle's list_reduce(list_prepend(0.0, list(l ORDER BY s)))
-    approx = (
-        codes_long.join(F.broadcast(lut_long), ["s", "code"])
-        .groupBy(id_col, "qid")
-        .agg(
-            F.aggregate(
-                F.array_sort(F.collect_list(F.struct(F.col("s"), F.col("l")))),
-                F.lit(0.0),
-                lambda acc, x: acc + x["l"],
-            ).alias("a")
-        )
-    )
 
+
+def _adc_fold(start):
+    """Approximate score ``a`` = start + Σ_s l, added in subspace order —
+    bit-identical to the oracle's
+    list_reduce(list_prepend(start, list(l ORDER BY s)), (a, b) -> a + b)."""
+    return F.aggregate(
+        F.array_sort(F.collect_list(F.struct(F.col("s"), F.col("l")))),
+        start,
+        lambda acc, x: acc + x["l"],
+    ).alias("a")
+
+
+def _rescore_topk(
+    approx: DataFrame,
+    emb: DataFrame,
+    qids: DataFrame,
+    rescore: int,
+    k: int,
+    id_col: str,
+    vec_col: str,
+) -> DataFrame:
+    """(query_id, id, raw, rank): the top-``rescore`` ADC candidates per
+    query (desc a, asc id; WindowGroupLimit), exact dot-product rescore
+    against the float vectors, top-k by (desc raw, asc id)."""
     wq = Window.partitionBy("qid").orderBy(F.desc("a"), F.asc(id_col))
     cand = (
         approx.withColumn("rn", F.row_number().over(wq))
@@ -798,9 +791,39 @@ def pq_topk(
     )
 
 
+def pq_topk(
+    emb: DataFrame,
+    codes: DataFrame,
+    codebook: DataFrame,
+    queries: DataFrame,
+    k: int = 10,
+    rescore: int = PQ_RESCORE,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> DataFrame:
+    """Asymmetric-distance PQ search: per query a PQ_SUB×PQ_CODES LUT of
+    qsub·csub dot products (tiny, broadcast), approximate score =
+    l0+…+l{PQ_SUB-1} looked up by each vector's codes, top-``rescore``
+    per query (WindowGroupLimit), exact dot-product rescore, top-k.
+
+    Scale: vectors are touched only (a) once at encode time and (b) for
+    the |queries|·rescore exact rescores — the approximate scan reads the
+    PQ_SUB-byte codes, an 8-byte-per-vector scan where the raw corpus is
+    256 bytes/vector, the classic PQ memory story.  All joins against
+    LUT/codebook/queries broadcast; candidates are narrow id rows."""
+    qids = queries.select(F.col(id_col).alias("qid"), F.col(vec_col).alias("qvec"))
+    approx = (
+        _codes_long(codes, id_col)
+        .join(F.broadcast(_lut_long(qids, codebook)), ["s", "code"])
+        .groupBy(id_col, "qid")
+        .agg(_adc_fold(F.lit(0.0)))
+    )
+    return _rescore_topk(approx, emb, qids, rescore, k, id_col, vec_col)
+
+
 # ---------------------------------------------------------------------------
 # IVF-PQ: coarse inverted-file pruning composed with PQ asymmetric-distance
-# scoring — the FAISS "IVFx,PQy" layout.  Unlike ivf_topk (Lloyd-refined
+# scoring — the FAISS "IVFx,PQy" layout.  Unlike ivf_build (Lloyd-refined
 # centroids, numpy assignment, hence rows-only checked), the coarse
 # quantizer here is the same reproducible hash-sample used by pq_codebook,
 # so the ENTIRE composed index — cell assignment, probe set, ADC scores,
@@ -818,15 +841,7 @@ def coarse_cells(
     (md5('ivf:'||id), id) — a distinct seed from pq_codebook so the coarse
     and fine quantizers sample independent rows."""
     key = F.md5(F.concat(F.lit("ivf:"), F.col(id_col).cast("string")))
-    return (
-        emb.select(F.col(id_col), F.col(vec_col), key.alias("__k"))
-        .orderBy("__k", id_col)
-        .limit(IVFPQ_CELLS)
-        .select(
-            (F.row_number().over(Window.orderBy("__k", id_col)) - 1).alias("cell"),
-            F.col(vec_col).alias("cenvec"),
-        )
-    )
+    return _hash_sample(emb, key, IVFPQ_CELLS, id_col, vec_col, "cell", "cenvec")
 
 
 def coarse_assign(
@@ -854,6 +869,25 @@ def coarse_assign(
     )
 
 
+def _coarse_probe(
+    qids: DataFrame, cents: DataFrame, assign: DataFrame, nprobe: int, id_col: str
+) -> DataFrame:
+    """(id, qid, qcen): every vector assigned to one of the query's
+    ``nprobe`` nearest coarse cells (same L2 identity as ``coarse_assign``,
+    ties on cell), with qcen = q·cen(cell), the residual ADC base term."""
+    cc = dot_product(F.col("cenvec"), F.col("cenvec"))
+    qc = dot_product(F.col("qvec"), F.col("cenvec"))
+    wp = Window.partitionBy("qid").orderBy("d", "cell")
+    probe = (
+        qids.crossJoin(F.broadcast(cents))
+        .select("qid", "cell", (cc - 2.0 * qc).alias("d"), qc.alias("qcen"))
+        .withColumn("rn", F.row_number().over(wp))
+        .filter(F.col("rn") <= nprobe)
+        .select("qid", "cell", "qcen")
+    )
+    return assign.join(F.broadcast(probe), "cell").select(id_col, "qid", "qcen")
+
+
 def ivfpq_topk(
     emb: DataFrame,
     codes: DataFrame,
@@ -878,83 +912,15 @@ def ivfpq_topk(
     centroid/LUT/query relation broadcasts, candidates stay narrow id
     rows, and both windows are WindowGroupLimit-bounded."""
     qids = queries.select(F.col(id_col).alias("qid"), F.col(vec_col).alias("qvec"))
-    cc = dot_product(F.col("cenvec"), F.col("cenvec"))
-    qc = dot_product(F.col("qvec"), F.col("cenvec"))
-    wp = Window.partitionBy("qid").orderBy("d", "cell")
-    probe = (
-        qids.crossJoin(F.broadcast(cents))
-        .select("qid", "cell", (cc - 2.0 * qc).alias("d"))
-        .withColumn("rn", F.row_number().over(wp))
-        .filter(F.col("rn") <= nprobe)
-        .select("qid", "cell")
-    )
-    cand_ids = assign.join(F.broadcast(probe), "cell").select("qid", id_col)
-
-    lut_long = (
-        qids.crossJoin(F.broadcast(codebook))
-        .select(
-            "qid",
-            "code",
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(s).alias("s"),
-                            dot_product(
-                                _sub(F.col("qvec"), s), _sub(F.col("cvec"), s)
-                            ).alias("l"),
-                        )
-                        for s in range(PQ_SUB)
-                    ]
-                )
-            ).alias("sl"),
-        )
-        .select("qid", F.col("sl.s").alias("s"), "code", F.col("sl.l").alias("l"))
-    )
-    codes_long = codes.select(
-        id_col,
-        F.explode(
-            F.array(
-                *[
-                    F.struct(F.lit(s).alias("s"), F.col(f"c{s}").alias("code"))
-                    for s in range(PQ_SUB)
-                ]
-            )
-        ).alias("sc"),
-    ).select(id_col, F.col("sc.s").alias("s"), F.col("sc.code").alias("code"))
     approx = (
-        cand_ids.join(codes_long, id_col)
-        .join(F.broadcast(lut_long), ["qid", "s", "code"])
+        _coarse_probe(qids, cents, assign, nprobe, id_col)
+        .select("qid", id_col)
+        .join(_codes_long(codes, id_col), id_col)
+        .join(F.broadcast(_lut_long(qids, codebook)), ["qid", "s", "code"])
         .groupBy(id_col, "qid")
-        .agg(
-            F.aggregate(
-                F.array_sort(F.collect_list(F.struct(F.col("s"), F.col("l")))),
-                F.lit(0.0),
-                lambda acc, x: acc + x["l"],
-            ).alias("a")
-        )
+        .agg(_adc_fold(F.lit(0.0)))
     )
-    wq = Window.partitionBy("qid").orderBy(F.desc("a"), F.asc(id_col))
-    cand = (
-        approx.withColumn("rn", F.row_number().over(wq))
-        .filter(F.col("rn") <= rescore)
-        .select(id_col, "qid")
-    )
-    exact = (
-        cand.join(emb.select(F.col(id_col), F.col(vec_col)), id_col)
-        .join(F.broadcast(qids), "qid")
-        .select(
-            F.col("qid").alias("query_id"),
-            F.col(id_col),
-            dot_product(vec_col, "qvec").alias("raw"),
-        )
-    )
-    wr = Window.partitionBy("query_id").orderBy(F.desc("raw"), F.asc(id_col))
-    return (
-        exact.withColumn("rank", F.row_number().over(wr))
-        .filter(F.col("rank") <= k)
-        .select("query_id", id_col, "raw", "rank")
-    )
+    return _rescore_topk(approx, emb, qids, rescore, k, id_col, vec_col)
 
 
 # ---------------------------------------------------------------------------
@@ -1000,15 +966,7 @@ def residual_codebook(resid: DataFrame, id_col: str = "vec_id") -> DataFrame:
     (md5('pqr:'||id), id) — seed distinct from both pq_codebook and the
     coarse sampler, so all three quantizers sample independent rows."""
     key = F.md5(F.concat(F.lit("pqr:"), F.col(id_col).cast("string")))
-    return (
-        resid.select(F.col(id_col), F.col("rvec"), key.alias("__k"))
-        .orderBy("__k", id_col)
-        .limit(PQ_CODES)
-        .select(
-            (F.row_number().over(Window.orderBy("__k", id_col)) - 1).alias("code"),
-            F.col("rvec").alias("cvec"),
-        )
-    )
+    return _hash_sample(resid, key, PQ_CODES, id_col, "rvec", "code", "cvec")
 
 
 def ivfpq_residual_topk(
@@ -1036,85 +994,11 @@ def ivfpq_residual_topk(
     (list_prepend(q·cen, ...) in the oracle) so both engines add the
     subspace terms in the identical order."""
     qids = queries.select(F.col(id_col).alias("qid"), F.col(vec_col).alias("qvec"))
-    cc = dot_product(F.col("cenvec"), F.col("cenvec"))
-    qc = dot_product(F.col("qvec"), F.col("cenvec"))
-    wp = Window.partitionBy("qid").orderBy("d", "cell")
-    probe = (
-        qids.crossJoin(F.broadcast(cents))
-        .select(
-            "qid",
-            "cell",
-            (cc - 2.0 * qc).alias("d"),
-            qc.alias("qcen"),
-        )
-        .withColumn("rn", F.row_number().over(wp))
-        .filter(F.col("rn") <= nprobe)
-        .select("qid", "cell", "qcen")
-    )
-    cand_ids = assign.join(F.broadcast(probe), "cell").select(id_col, "qid", "qcen")
-
-    lut_long = (
-        qids.crossJoin(F.broadcast(codebook))
-        .select(
-            "qid",
-            "code",
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(s).alias("s"),
-                            dot_product(
-                                _sub(F.col("qvec"), s), _sub(F.col("cvec"), s)
-                            ).alias("l"),
-                        )
-                        for s in range(PQ_SUB)
-                    ]
-                )
-            ).alias("sl"),
-        )
-        .select("qid", F.col("sl.s").alias("s"), "code", F.col("sl.l").alias("l"))
-    )
-    codes_long = codes.select(
-        id_col,
-        F.explode(
-            F.array(
-                *[
-                    F.struct(F.lit(s).alias("s"), F.col(f"c{s}").alias("code"))
-                    for s in range(PQ_SUB)
-                ]
-            )
-        ).alias("sc"),
-    ).select(id_col, F.col("sc.s").alias("s"), F.col("sc.code").alias("code"))
     approx = (
-        cand_ids.join(codes_long, id_col)
-        .join(F.broadcast(lut_long), ["qid", "s", "code"])
+        _coarse_probe(qids, cents, assign, nprobe, id_col)
+        .join(_codes_long(codes, id_col), id_col)
+        .join(F.broadcast(_lut_long(qids, codebook)), ["qid", "s", "code"])
         .groupBy(id_col, "qid", "qcen")
-        .agg(
-            F.aggregate(
-                F.array_sort(F.collect_list(F.struct(F.col("s"), F.col("l")))),
-                F.col("qcen"),
-                lambda acc, x: acc + x["l"],
-            ).alias("a")
-        )
+        .agg(_adc_fold(F.col("qcen")))
     )
-    wq = Window.partitionBy("qid").orderBy(F.desc("a"), F.asc(id_col))
-    cand = (
-        approx.withColumn("rn", F.row_number().over(wq))
-        .filter(F.col("rn") <= rescore)
-        .select(id_col, "qid")
-    )
-    exact = (
-        cand.join(emb.select(F.col(id_col), F.col(vec_col)), id_col)
-        .join(F.broadcast(qids), "qid")
-        .select(
-            F.col("qid").alias("query_id"),
-            F.col(id_col),
-            dot_product(vec_col, "qvec").alias("raw"),
-        )
-    )
-    wr = Window.partitionBy("query_id").orderBy(F.desc("raw"), F.asc(id_col))
-    return (
-        exact.withColumn("rank", F.row_number().over(wr))
-        .filter(F.col("rank") <= k)
-        .select("query_id", id_col, "raw", "rank")
-    )
+    return _rescore_topk(approx, emb, qids, rescore, k, id_col, vec_col)

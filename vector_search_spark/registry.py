@@ -287,6 +287,7 @@ def q_search_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 # end so they can import `register` from this module.
 from . import (  # noqa: E402, F401
     registry_analytics,
+    registry_ann,
     registry_dedup,
     registry_extensions,
     registry_features,

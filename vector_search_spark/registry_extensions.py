@@ -1,70 +1,27 @@
-"""Registry entries for genuinely non-SQL-expressible operators (no
-DuckDB oracle — the driver records rows-only checks): multimodal decode
-plumbing and approximate (IVF) vector search.  Both are deterministic, so
-row counts and values are stable across runs."""
+"""Registry entries for multimodal and embedding-space operators: the
+md5-stub decode features, media sampling plans and perceptual-hash
+near-dups, SRP-bucketed embedding near-dups, embedding drift (MMD), JL
+projection distortion and mutual k-NN pairs.  Every entry has a bit-exact
+DuckDB oracle.  The ANN family lives in registry_ann; the SRP near-dup
+entries reuse its hyperplane constants and band index."""
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .artifacts import artifact, cached, persisted
 from .functions.scalar import round4
-from .operators.ann import ivf_build, ivf_query, srp_band_table, srp_planes, srp_topk
+from .operators.ann import srp_band_table, srp_planes
 from .registry import register
+from .registry_ann import (
+    _SQL_SRP_BANDS,
+    _SQL_SRP_SIG,
+    _SRP_BANDS,
+    _SRP_DIM,
+    _shared_srp_index,
+)
 from .sources.tables import load_table as __load
-
-# --- SRP-LSH oracle SQL, generated from the SAME md5-derived hyperplane
-# constants the Spark operator uses (repr round-trips doubles exactly) -------
-_SRP_BITS, _SRP_BANDS, _SRP_DIM = 16, 4, 64
-_SRP_MASK = (1 << (_SRP_BITS // _SRP_BANDS)) - 1
-_PLANES = srp_planes(_SRP_DIM, _SRP_BITS)
-
-_SQL_SRP_SIG = " + ".join(
-    "CASE WHEN list_dot_product(embedding::DOUBLE[], [{vals}]) >= 0 "
-    "THEN {w}::BIGINT ELSE 0 END".format(
-        vals=", ".join(repr(x) for x in plane), w=1 << b
-    )
-    for b, plane in enumerate(_PLANES)
-)
-_SQL_SRP_BANDS = ", ".join(
-    f"(sig >> {i * (_SRP_BITS // _SRP_BANDS)}) & {_SRP_MASK} AS b{i}"
-    for i in range(_SRP_BANDS)
-)
-_SQL_SRP_CAND = " UNION ".join(
-    f"SELECT q.query_id, i.vec_id FROM qb q JOIN ib i ON q.b{i} = i.b{i}"
-    for i in range(_SRP_BANDS)
-)
-_SRP_ORACLE = f"""
-    WITH sig AS (
-      SELECT vec_id, ({_SQL_SRP_SIG}) AS sig FROM embeddings),
-    qb AS (SELECT vec_id AS query_id, {_SQL_SRP_BANDS} FROM sig WHERE vec_id < 20),
-    ib AS (SELECT vec_id, {_SQL_SRP_BANDS} FROM sig),
-    cand AS ({_SQL_SRP_CAND}),
-    scored AS (
-      SELECT c.query_id, c.vec_id,
-             list_dot_product(e.embedding::DOUBLE[], q.embedding::DOUBLE[]) AS raw
-      FROM cand c
-      JOIN embeddings e ON c.vec_id = e.vec_id
-      JOIN embeddings q ON c.query_id = q.vec_id)
-    SELECT query_id, vec_id,
-           floor((raw)*10000 + 0.5)/10000.0 AS score,
-           rank::INTEGER AS rank
-    FROM (SELECT *, row_number() OVER (PARTITION BY query_id
-                                       ORDER BY raw DESC, vec_id) AS rank
-          FROM scored)
-    WHERE rank <= 10
-    """
-
-# IVF index cache per (session, sf_dir): the build (centroid sample + Lloyd
-# refine + assignment) is the amortizable part — at 100 TB it's a persisted
-# partitionBy(cell) table; in-session a persisted DataFrame plays that role
-# so the registered query measures the QUERY path, not an index rebuild.
-@artifact
-def _shared_ivf_index(spark: SparkSession, sf_dir: str):
-    emb = __load(spark, sf_dir, "embeddings")
-    cent_mat, indexed = ivf_build(emb, n_centroids=16, replicas=2)
-    return cent_mat, persisted(indexed)
 
 
 @register(
@@ -139,119 +96,6 @@ def q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("doc_id", "feat_idx")
 
 
-@register("ann_ivf_topk")
-def q_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF ANN top-10 for 20 queries (deterministic centroids + Lloyd
-    refinement; approximate ⇒ no SQL oracle, recall pinned in pytest)."""
-    cent_mat, indexed = _shared_ivf_index(spark, sf_dir)
-    # query batch drawn from the persisted index (no parquet re-scan;
-    # replicas deduped) — same vectors as the embeddings table
-    queries = (
-        indexed.filter(F.col("vec_id") < 20)
-        .dropDuplicates(["vec_id"])
-        .select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec"))
-    )
-    out = ivf_query(indexed, cent_mat, queries, k=10, nprobe=8)
-    return out.select("query_id", "vec_id", round4("score").alias("score"), "rank")
-
-
-@register("ann_ivf_probe_sweep")
-def q_ann_ivf_probe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF recall-vs-nprobe curve (VERDICT-r6 #5): recall@10 of the IVF
-    path at nprobe ∈ {1, 2, 4, 8, 16} against exact KNN ground truth,
-    for the 20 standard query vectors — the tuning curve an ANN
-    deployment reads to pick its latency/recall operating point.  At
-    nprobe = 16 every cell is probed, so recall MUST be exactly 1.0
-    (probing all cells IS the exact scan) — pinned in pytest as the
-    self-validating end of the curve, alongside monotonicity in nprobe.
-
-    Rows-only (like `ann_ivf_topk`: Lloyd-refined centroids aren't
-    SQL-expressible), but the output is exact rational arithmetic —
-    matched/200 — so the values are deterministic and golden-pinnable.
-
-    Scale: the sweep reuses the session-shared IVF index (the amortized
-    build) and — since round 11 — scores every probed cell ONCE: each
-    query's 16 cells carry their probe rank, a candidate's ENTRY LEVEL
-    is its minimum probe rank over the cells that contain it, and the
-    five legs are `entry <= nprobe` filters of that one scored table
-    (guide §1.2: the old shape ran five independent ivf_query plans —
-    5 probe collects, 5 scored joins, 5 windows — recomputing the
-    nprobe=16 superset's work up to 5×).  A candidate enters leg n iff
-    one of its cells is among the query's top-n probes, which is exactly
-    the per-leg candidate set; scores are identical dot products, so
-    each leg's top-10 is unchanged row-for-row.  Ground truth is one
-    broadcast-queries exact scan, bounded by the query set.
-    """
-    from .operators.ann import ivf_probe_sweep_topk
-    from .operators.knn import similarity_join
-
-    emb = __load(spark, sf_dir, "embeddings")
-    cent_mat, indexed = _shared_ivf_index(spark, sf_dir)
-    queries = (
-        indexed.filter(F.col("vec_id") < 20)
-        .dropDuplicates(["vec_id"])
-        .select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec"))
-    )
-    exact = similarity_join(emb, queries, k=10).select("query_id", "vec_id")
-    sweep = (1, 2, 4, 8, 16)
-    # one scored pass shared across legs — the probe model lives in
-    # operators/ann.ivf_probe_sweep_topk, the SAME module as ivf_query, so
-    # the sweep cannot silently desynchronize from the single-leg path
-    # (ADVICE r11); leg-for-leg equality is pinned in pytest
-    topk = ivf_probe_sweep_topk(indexed, cent_mat, queries, sweep=sweep, k=10).select(
-        "nprobe", F.col("query_id").alias("a_qid"), F.col("vec_id").alias("a_vec")
-    )
-    n_expected = 20 * 10
-    return (
-        exact.join(
-            topk,
-            (exact.query_id == topk.a_qid) & (exact.vec_id == topk.a_vec),
-            "inner",
-        )
-        .groupBy("nprobe")
-        .agg(F.count(F.lit(1)).cast("long").alias("matched"))
-        .select(
-            F.col("nprobe").cast("int").alias("nprobe"),
-            "matched",
-            round4(F.col("matched") / float(n_expected)).alias("recall_at_10"),
-        )
-        .orderBy("nprobe")
-    )
-
-
-# SRP band-bucket index cache per (session, sf_dir) — same amortized-index
-# model as the IVF index: the 16 hyperplane-projection folds over the corpus
-# are the build cost (a partitionBy(band) parquet at scale); the registered
-# query times banding 20 query vectors + candidate join + exact rescore.
-@artifact
-def _shared_srp_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = __load(spark, sf_dir, "embeddings")
-    return persisted(
-        srp_band_table(
-            emb, "vec_id", "embedding", _SRP_BITS, _SRP_BANDS, dim=_SRP_DIM, spread=True
-        )
-    )
-
-
-@register("ann_srp_topk", oracle=_SRP_ORACLE)
-def q_ann_srp_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SRP-LSH ANN top-10 for 20 queries: signed-random-projection band
-    buckets → exact rescore.  The hyperplanes are md5-derived constants, so
-    unlike IVF the whole approximate pipeline is SQL-expressible and this
-    ANN entry is verified bit-exactly against DuckDB (candidates AND
-    ranks), not just rows-only.  The corpus-side band table comes from the
-    session-shared SRP index (amortized build, like IVF)."""
-    emb = __load(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 20).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
-    out = srp_topk(
-        emb, queries, k=10, n_bits=_SRP_BITS, bands=_SRP_BANDS, dim=_SRP_DIM,
-        index_bands=_shared_srp_index(spark, sf_dir),
-    )
-    return out.select("query_id", "vec_id", round4("score").alias("score"), "rank")
-
-
 @register(
     "media_sampling_plan",
     oracle="""
@@ -318,78 +162,6 @@ def q_media_sampling_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(sg, "doc_id")
         .orderBy("doc_id")
     )
-
-
-# SQ code-table cache per (session, sf_dir) — same amortized-index model:
-# quantization constants + int8 codes are the build (a packed-bytes parquet
-# at scale); the registered query times approximate scan + exact rescore.
-@artifact
-def _shared_sq_index(spark: SparkSession, sf_dir: str):
-    from .operators.ann import sq_code_table, sq_stats
-
-    emb = __load(spark, sf_dir, "embeddings")
-    mins, scales = sq_stats(emb)
-    return mins, scales, persisted(sq_code_table(emb, mins, scales))
-
-
-_SQ_ORACLE = """
-    WITH dims AS (SELECT unnest(range(1, 65)) AS j),
-    st AS (
-      SELECT j, min(embedding[j]::DOUBLE) AS mn, max(embedding[j]::DOUBLE) AS mx
-      FROM embeddings, dims GROUP BY j),
-    sc AS (SELECT j, mn, (mx - mn) / 255.0 AS s FROM st),
-    cd AS (
-      SELECT vec_id, j, mn, s,
-             CASE WHEN s = 0.0 THEN 0.0
-                  ELSE least(255, greatest(0,
-                         floor((embedding[j]::DOUBLE - mn) / s + 0.5))) END AS c
-      FROM embeddings, sc),
-    dql AS (SELECT vec_id, list(mn + c * s ORDER BY j) AS dq FROM cd GROUP BY vec_id),
-    q AS (SELECT vec_id AS query_id, embedding FROM embeddings WHERE vec_id < 20),
-    ap AS (
-      SELECT q.query_id, d.vec_id,
-             list_dot_product(d.dq, q.embedding::DOUBLE[]) AS approx_score
-      FROM dql d CROSS JOIN q),
-    cand AS (
-      SELECT query_id, vec_id FROM (
-        SELECT *, row_number() OVER (PARTITION BY query_id
-                                     ORDER BY approx_score DESC, vec_id) AS cr
-        FROM ap)
-      WHERE cr <= 40),
-    ex AS (
-      SELECT c.query_id, c.vec_id,
-             list_dot_product(e.embedding::DOUBLE[], q2.embedding::DOUBLE[]) AS raw
-      FROM cand c
-      JOIN embeddings e ON c.vec_id = e.vec_id
-      JOIN embeddings q2 ON c.query_id = q2.vec_id)
-    SELECT query_id, vec_id,
-           floor(raw * 10000 + 0.5) / 10000.0 AS score,
-           rank::INTEGER AS rank
-    FROM (SELECT *, row_number() OVER (PARTITION BY query_id
-                                       ORDER BY raw DESC, vec_id) AS rank
-          FROM ex)
-    WHERE rank <= 10
-    """
-
-
-@register("ann_sq_topk", oracle=_SQ_ORACLE)
-def q_ann_sq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Int8 scalar-quantization ANN top-10 for 20 queries: per-dimension
-    (min, scale) constants → int8 codes → dequantized approximate scan →
-    exact rescore of the top 40.  The compression pipeline is pure
-    min/max + floor math, so — like SRP and unlike IVF — the whole
-    approximate path has a bit-exact DuckDB oracle (candidates AND ranks).
-    The code table comes from the session-shared SQ index (amortized
-    build; packed-bytes parquet at scale)."""
-    from .operators.ann import sq_topk
-
-    emb = __load(spark, sf_dir, "embeddings")
-    mins, scales, codes = _shared_sq_index(spark, sf_dir)
-    queries = emb.filter(F.col("vec_id") < 20).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
-    out = sq_topk(codes, emb, queries, mins, scales, k=10, rescore=40)
-    return out.select("query_id", "vec_id", round4("score").alias("score"), "rank")
 
 
 # ---------------------------------------------------------------------------
@@ -701,187 +473,6 @@ def q_dedup_embedding_srp_narrow_demo(spark: SparkSession, sf_dir: str) -> DataF
 
 
 # ---------------------------------------------------------------------------
-# PQ ANN with a full bit-exact oracle (hash-sampled codebooks keep every
-# stage SQL-expressible; see operators/ann.py PQ section).
-# ---------------------------------------------------------------------------
-from .operators.ann import (  # noqa: E402
-    PQ_CODES, PQ_RESCORE, PQ_SD, PQ_SUB, pq_codebook, pq_encode, pq_topk,
-)
-
-
-def _pq_slice(expr: str, s: int) -> str:
-    return f"({expr})[{s * PQ_SD + 1}:{(s + 1) * PQ_SD}]"
-
-
-def _pq_oracle() -> str:
-    d_cols = ",\n             ".join(
-        f"list_dot_product({_pq_slice('cb.cvec', s)}, {_pq_slice('cb.cvec', s)})"
-        f" - 2.0 * list_dot_product({_pq_slice('v.embedding::DOUBLE[]', s)}, {_pq_slice('cb.cvec', s)})"
-        f" AS d{s}"
-        for s in range(PQ_SUB)
-    )
-    c_aggs = ",\n             ".join(
-        f"first(code ORDER BY d{s}, code) AS c{s}" for s in range(PQ_SUB)
-    )
-    codes_long = "\n      UNION ALL ".join(
-        f"SELECT vec_id, {s} AS s, c{s} AS code FROM codes" for s in range(PQ_SUB)
-    )
-    lut_long = "\n      UNION ALL ".join(
-        f"SELECT q.qid, {s} AS s, cb.code, "
-        f"list_dot_product({_pq_slice('q.qvec', s)}, {_pq_slice('cb.cvec', s)}) AS l "
-        f"FROM q CROSS JOIN cb"
-        for s in range(PQ_SUB)
-    )
-    return f"""
-    WITH ordered AS (
-      SELECT embedding::DOUBLE[] AS cvec
-      FROM embeddings ORDER BY md5(vec_id::VARCHAR), vec_id LIMIT {PQ_CODES}),
-    cb AS (
-      SELECT row_number() OVER () - 1 AS code, cvec
-      FROM ordered),
-    dist AS (
-      SELECT v.vec_id, cb.code,
-             {d_cols}
-      FROM embeddings v CROSS JOIN cb),
-    codes AS (
-      SELECT vec_id,
-             {c_aggs}
-      FROM dist GROUP BY vec_id),
-    q AS (SELECT vec_id AS qid, embedding::DOUBLE[] AS qvec
-          FROM embeddings WHERE vec_id < 20),
-    codes_long AS (
-      {codes_long}),
-    lut_long AS (
-      {lut_long}),
-    approx AS (
-      SELECT cl.vec_id, lu.qid,
-             list_reduce(list_prepend(0.0, list(lu.l ORDER BY lu.s)),
-                         (a, b) -> a + b) AS a
-      FROM codes_long cl JOIN lut_long lu ON lu.s = cl.s AND lu.code = cl.code
-      GROUP BY cl.vec_id, lu.qid),
-    cand AS (
-      SELECT qid, vec_id FROM (
-        SELECT qid, vec_id,
-               row_number() OVER (PARTITION BY qid ORDER BY a DESC, vec_id) AS rn
-        FROM approx)
-      WHERE rn <= {PQ_RESCORE}),
-    exact AS (
-      SELECT cand.qid AS query_id, cand.vec_id,
-             list_dot_product(e.embedding::DOUBLE[], qq.qvec) AS raw
-      FROM cand
-      JOIN embeddings e ON cand.vec_id = e.vec_id
-      JOIN q qq ON cand.qid = qq.qid)
-    SELECT query_id, vec_id,
-           floor(raw*10000 + 0.5)/10000.0 AS score,
-           rank::INTEGER AS rank
-    FROM (SELECT *, row_number() OVER (PARTITION BY query_id
-                                       ORDER BY raw DESC, vec_id) AS rank
-          FROM exact)
-    WHERE rank <= 10
-    """
-
-
-@artifact
-def _shared_pq_index(spark: SparkSession, sf_dir: str):
-    """(codebook, codes) — build-once artifact like the IVF/SRP/SQ caches;
-    at scale the codes table is the 8-bytes-per-vector packed index one
-    materializes next to the corpus."""
-    emb = __load(spark, sf_dir, "embeddings")
-    cb = persisted(pq_codebook(emb))
-    return cb, persisted(pq_encode(emb, cb))
-
-
-@register("ann_pq_topk", oracle=_pq_oracle())
-def q_ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PQ (product-quantization) ANN top-10 for 20 queries — the 4th ANN
-    path, completing IVF / SRP-LSH / int8-SQ / PQ.  Hash-sampled
-    codebooks keep the whole pipeline deterministic and SQL-expressible,
-    so unlike textbook (Lloyd-trained) PQ this entry is verified
-    BIT-EXACTLY against DuckDB: codebook choice, per-subspace code
-    assignment, LUT scores, candidate set, and final ranks.  Recall floor
-    pinned in pytest alongside.  Scale notes in operators/ann.py."""
-    emb = __load(spark, sf_dir, "embeddings")
-    cb, codes = _shared_pq_index(spark, sf_dir)
-    queries = emb.filter(F.col("vec_id") < 20)
-    out = pq_topk(emb, codes, cb, queries, k=10)
-    return out.select("query_id", "vec_id", round4("raw").alias("score"), "rank")
-
-
-# ---------------------------------------------------------------------------
-# Filtered ANN: metadata predicate applied BEFORE the approximate scan.
-# ---------------------------------------------------------------------------
-@register(
-    "ann_filtered_topk",
-    oracle="""
-    WITH dims AS (SELECT unnest(range(1, 65)) AS j),
-    st AS (
-      SELECT j, min(embedding[j]::DOUBLE) AS mn, max(embedding[j]::DOUBLE) AS mx
-      FROM embeddings, dims GROUP BY j),
-    sc AS (SELECT j, mn, (mx - mn) / 255.0 AS s FROM st),
-    filt AS (SELECT vec_id FROM embeddings WHERE label BETWEEN 2 AND 5),
-    cd AS (
-      SELECT e.vec_id, sc.j, sc.mn, sc.s,
-             CASE WHEN sc.s = 0.0 THEN 0.0
-                  ELSE least(255, greatest(0,
-                         floor((e.embedding[sc.j]::DOUBLE - sc.mn) / sc.s + 0.5))) END AS c
-      FROM embeddings e JOIN filt f ON e.vec_id = f.vec_id, sc),
-    dql AS (SELECT vec_id, list(mn + c * s ORDER BY j) AS dq FROM cd GROUP BY vec_id),
-    q AS (SELECT vec_id AS query_id, embedding FROM embeddings WHERE vec_id < 10),
-    ap AS (
-      SELECT q.query_id, d.vec_id,
-             list_dot_product(d.dq, q.embedding::DOUBLE[]) AS approx_score
-      FROM dql d CROSS JOIN q),
-    cand AS (
-      SELECT query_id, vec_id FROM (
-        SELECT *, row_number() OVER (PARTITION BY query_id
-                                     ORDER BY approx_score DESC, vec_id) AS cr
-        FROM ap)
-      WHERE cr <= 40),
-    ex AS (
-      SELECT c.query_id, c.vec_id,
-             list_dot_product(e.embedding::DOUBLE[], q2.embedding::DOUBLE[]) AS raw
-      FROM cand c
-      JOIN embeddings e ON c.vec_id = e.vec_id
-      JOIN embeddings q2 ON c.query_id = q2.vec_id)
-    SELECT query_id, vec_id,
-           floor(raw * 10000 + 0.5) / 10000.0 AS score,
-           rank::INTEGER AS rank
-    FROM (SELECT *, row_number() OVER (PARTITION BY query_id
-                                       ORDER BY raw DESC, vec_id) AS rank
-          FROM ex)
-    WHERE rank <= 10
-    """,
-)
-def q_ann_filtered_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """FILTERED vector search (the production ANN shape: "nearest docs
-    WHERE label ∈ [2,5]") on the int8-SQ path, done the correct way —
-    PRE-filtering: the metadata predicate restricts the code table BEFORE
-    the approximate scan, so top-k is always full (post-filtering an
-    unfiltered top-k under-fills or misses matches — the classic filtered
-    -ANN bug).  Quantization constants stay CORPUS-level: the index is
-    built once and serves every predicate; only the probe is filtered.
-
-    Scale: the predicate lands on a narrow (vec_id, label) join against
-    the session-shared code table — at 100 TB, labels live alongside codes
-    in the index parquet and the filter pushes down to the scan; the
-    approximate pass then touches only surviving codes (broadcast queries,
-    WindowGroupLimit top-40), and the exact rescore touches O(queries ×
-    40) float vectors.  Bit-exact DuckDB twin for the whole pipeline."""
-    from .operators.ann import sq_topk
-
-    emb = __load(spark, sf_dir, "embeddings")
-    mins, scales, codes = _shared_sq_index(spark, sf_dir)
-    keep = emb.filter(F.col("label").between(2, 5)).select("vec_id")
-    fcodes = codes.join(keep, "vec_id")
-    femb = emb.join(keep, "vec_id")
-    queries = emb.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
-    out = sq_topk(fcodes, femb, queries, mins, scales, k=10, rescore=40)
-    return out.select("query_id", "vec_id", round4("score").alias("score"), "rank")
-
-
-# ---------------------------------------------------------------------------
 # Media perceptual-hash near-dup: the multimodal arm of the dedup family.
 # ---------------------------------------------------------------------------
 # 32-bit hash, 2 × 16-bit bands since round 6 (was 16-bit / 2 × 8): the
@@ -972,87 +563,6 @@ def q_media_phash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(ham <= PHASH_MAX_HAMMING)
         .select("id_1", "id_2", ham.cast("long").alias("hamming"))
         .orderBy("id_1", "id_2")
-    )
-
-
-# ---------------------------------------------------------------------------
-# ANN index-quality evaluation: SRP recall@10 vs exact KNN, in-engine.
-# ---------------------------------------------------------------------------
-@register(
-    "ann_srp_recall_eval",
-    oracle=f"""
-    WITH sig AS (
-      SELECT vec_id, ({_SQL_SRP_SIG}) AS sig FROM embeddings),
-    qb AS (SELECT vec_id AS query_id, {_SQL_SRP_BANDS} FROM sig WHERE vec_id < 20),
-    ib AS (SELECT vec_id, {_SQL_SRP_BANDS} FROM sig),
-    cand AS ({_SQL_SRP_CAND}),
-    approx AS (
-      SELECT query_id, vec_id FROM (
-        SELECT c.query_id, c.vec_id,
-               row_number() OVER (PARTITION BY c.query_id ORDER BY
-                 list_dot_product(e.embedding::DOUBLE[], q.embedding::DOUBLE[]) DESC,
-                 c.vec_id) AS rank
-        FROM cand c
-        JOIN embeddings e ON c.vec_id = e.vec_id
-        JOIN embeddings q ON c.query_id = q.vec_id)
-      WHERE rank <= 10),
-    q AS (SELECT vec_id AS query_id, embedding FROM embeddings WHERE vec_id < 20),
-    exact AS (
-      SELECT query_id, vec_id FROM (
-        SELECT q.query_id, e.vec_id,
-               row_number() OVER (PARTITION BY q.query_id ORDER BY
-                 list_dot_product(e.embedding::DOUBLE[], q.embedding::DOUBLE[]) DESC,
-                 e.vec_id) AS rank
-        FROM embeddings e CROSS JOIN q)
-      WHERE rank <= 10)
-    SELECT x.query_id,
-           count(a.vec_id)::BIGINT AS hits,
-           floor((count(a.vec_id) / 10.0) * 10000 + 0.5) / 10000.0 AS recall_at_10
-    FROM exact x
-    LEFT JOIN approx a ON x.query_id = a.query_id AND x.vec_id = a.vec_id
-    GROUP BY x.query_id
-    ORDER BY x.query_id
-    """,
-)
-def q_ann_srp_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Index-quality evaluation run INSIDE the engine: per-query recall@10
-    of the SRP-LSH path against exact KNN ground truth — the health check
-    an ANN deployment runs after every index rebuild (recall drift is how
-    quantization/banding bugs and distribution shift surface in
-    production).  Because BOTH pipelines are deterministic md5-math, the
-    whole evaluation — candidates, ranks, hit counts — has a bit-exact
-    DuckDB twin, which is exactly what makes this a trustworthy gate.
-
-    Scale: ground truth is the broadcast-queries exact scan (bounded by
-    the query set, not the corpus); the approx side reuses the
-    session-shared SRP band table; the comparison is a narrow
-    (query_id, vec_id) left join over 10·|queries| rows."""
-    from .operators.ann import srp_topk
-    from .operators.knn import similarity_join
-
-    emb = __load(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 20).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
-    approx = srp_topk(
-        emb, queries, k=10, n_bits=_SRP_BITS, bands=_SRP_BANDS, dim=_SRP_DIM,
-        index_bands=_shared_srp_index(spark, sf_dir),
-    ).select(F.col("query_id").alias("a_qid"), F.col("vec_id").alias("a_vec"))
-    exact = similarity_join(emb, queries, k=10).select("query_id", "vec_id")
-    return (
-        exact.join(
-            approx,
-            (exact.query_id == approx.a_qid) & (exact.vec_id == approx.a_vec),
-            "left",
-        )
-        .groupBy("query_id")
-        .agg(F.count("a_vec").cast("long").alias("hits"))
-        .select(
-            "query_id",
-            "hits",
-            round4(F.col("hits") / 10.0).alias("recall_at_10"),
-        )
-        .orderBy("query_id")
     )
 
 

@@ -7,6 +7,7 @@ from __future__ import annotations
 import math
 import os
 import sys
+from contextlib import contextmanager
 from pathlib import Path
 
 import duckdb
@@ -87,6 +88,25 @@ def stream_sf(default: str) -> str:
 TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings"
 ).split()
+
+
+@contextmanager
+def py4j_commands(spark):
+    """Count the py4j commands sent while the block runs, except memory
+    (``m``) commands, whose number depends on Python GC timing."""
+    cls = type(spark.sparkContext._gateway._gateway_client)
+    real, count = cls.send_command, [0]
+
+    def send(self, command, *a, **kw):
+        if not command.startswith("m"):
+            count[0] += 1
+        return real(self, command, *a, **kw)
+
+    cls.send_command = send
+    try:
+        yield count
+    finally:
+        cls.send_command = real
 
 
 @pytest.fixture(scope="session")

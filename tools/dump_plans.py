@@ -7,14 +7,27 @@ Writes <out_dir>/<query>_<suffix>.txt for each query (e.g. suffix =
 "before" / "after" for the optimization-round plan evidence).  Uses the
 sf0.1 fixture dir (override with SPARK_GRAFT_SF_DIR) so the plans carry
 the same statistics the bench sees.
+
+Expression ids (``#123``) and ``plan_id=N`` are stripped: they count up
+per session, so two runs of the same plan differ only in them, and with
+them removed identical plans diff empty.
 """
 
 from __future__ import annotations
 
 import os
+import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+
+_SESSION_IDS = re.compile(r"#\d+|plan_id=\d+")
+
+
+def strip_ids(plan: str) -> str:
+    """``plan`` without the per-session expression and plan ids."""
+    return _SESSION_IDS.sub("", plan)
 
 
 def main() -> None:
@@ -38,7 +51,7 @@ def main() -> None:
         )
         path = os.path.join(out_dir, f"{name}_{suffix}.txt")
         with open(path, "w") as f:
-            f.write(plan)
+            f.write(strip_ids(plan))
         print(f"# wrote {path} ({len(plan)} bytes)")
 
 

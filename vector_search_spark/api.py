@@ -14,7 +14,6 @@ import datetime as dt
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from .plans.search import search
 
@@ -61,18 +60,14 @@ def search_newsletter(
         id_col="chunk_id",
         payload_cols=("title", "date", "category", "url"),
     )
-    # Q7 projection/casting + Q8 snippet truncation, applied lazily
-    shaped = result.select(
-        F.col("title").cast("string").alias("title"),
-        F.col("date").cast("string").alias("date"),
-        F.col("category").cast("string").alias("category"),
-        F.col("url").cast("string").alias("url"),
-        F.col("text").cast("string").alias("text"),
-        F.when(
-            F.length("text") > snippet_chars,
-            F.concat(F.substring("text", 1, snippet_chars), F.lit("...")),
-        ).otherwise(F.col("text")).alias("snippet"),
-        F.col("score"),
+    # Q7 projection/casting + Q8 snippet truncation, applied lazily, as one
+    # selectExpr (a few py4j calls instead of one per Column operation)
+    n = int(snippet_chars)
+    shaped = result.selectExpr(
+        *(f"CAST(`{c}` AS STRING) AS `{c}`" for c in ("title", "date", "category", "url", "text")),
+        f"CASE WHEN length(`text`) > {n} THEN concat(substring(`text`, 1, {n}), '...')"
+        " ELSE `text` END AS `snippet`",
+        "`score`",
     )
     rows = [r.asDict() for r in shaped.collect()]  # ≤ limit rows
     return {

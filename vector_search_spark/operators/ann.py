@@ -28,7 +28,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.vector import dot_product
+from ..functions.vector import dot_product, vector_literal
 
 
 def ivf_centroids(
@@ -352,9 +352,8 @@ def srp_signature(vec_col, planes: list[list[float]]):
     vec = F.col(vec_col) if isinstance(vec_col, str) else vec_col
     bits: list[Column] = []
     for b, plane in enumerate(planes):
-        arr = F.array(*[F.lit(float(x)) for x in plane])
         dot = F.aggregate(
-            F.zip_with(vec, arr, lambda a, p: a.cast("double") * p),
+            F.zip_with(vec, vector_literal(plane), lambda a, p: a.cast("double") * p),
             F.lit(0.0),
             lambda acc, x: acc + x,
         )
@@ -524,11 +523,11 @@ def sq_code_table(
     stays resident (packed bytes in parquet) while float vectors are only
     fetched for the final rescore.  Pure ``transform`` expressions: the
     whole encode runs in whole-stage codegen, embarrassingly parallel."""
+    mins_lit, scales_lit = vector_literal(mins), vector_literal(scales)
     code = F.transform(
         F.col(vec_col),
         lambda x, j: F.when(
-            F.element_at(F.array(*[F.lit(s) for s in scales]), (j + 1).cast("int"))
-            == 0.0,
+            F.element_at(scales_lit, (j + 1).cast("int")) == 0.0,
             F.lit(0).cast("long"),
         ).otherwise(
             F.least(
@@ -536,15 +535,8 @@ def sq_code_table(
                 F.greatest(
                     F.lit(0).cast("long"),
                     F.floor(
-                        (
-                            x.cast("double")
-                            - F.element_at(
-                                F.array(*[F.lit(m) for m in mins]), (j + 1).cast("int")
-                            )
-                        )
-                        / F.element_at(
-                            F.array(*[F.lit(s) for s in scales]), (j + 1).cast("int")
-                        )
+                        (x.cast("double") - F.element_at(mins_lit, (j + 1).cast("int")))
+                        / F.element_at(scales_lit, (j + 1).cast("int"))
                         + F.lit(0.5)
                     ),
                 ),
@@ -575,11 +567,11 @@ def sq_topk(
     exact pass joins O(queries × rescore) ids back to the float table.
     Both passes use the same ordered fold as exact KNN, so every score is
     reproducible bit-for-bit (ties broken by id)."""
+    mins_lit, scales_lit = vector_literal(mins), vector_literal(scales)
     dq = F.transform(
         F.col("codes"),
-        lambda c, j: F.element_at(F.array(*[F.lit(m) for m in mins]), (j + 1).cast("int"))
-        + c.cast("double")
-        * F.element_at(F.array(*[F.lit(s) for s in scales]), (j + 1).cast("int")),
+        lambda c, j: F.element_at(mins_lit, (j + 1).cast("int"))
+        + c.cast("double") * F.element_at(scales_lit, (j + 1).cast("int")),
     )
     approx = (
         codes.crossJoin(F.broadcast(queries))

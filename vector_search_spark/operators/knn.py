@@ -23,6 +23,11 @@ Scale design (the part that must survive 100 TB / 1000 executors):
   per-partition top-k: the shuffle is already bounded at
   ``num_partitions * |Q| * k`` narrow rows regardless of corpus size, with
   no Python worker in the plan.
+- **Per-request construction**: the query vector enters the plan as one
+  string literal cast to ``array<double>`` (folded by the optimizer into
+  the same constant array a per-element ``F.lit`` list gives) and the
+  score as one SQL expression, so building a request's plan costs the
+  same few py4j calls at any dimension instead of ~5 per element.
 """
 
 from __future__ import annotations
@@ -32,15 +37,29 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.vector import dot_product
+from ..functions.vector import dot_product, dot_sql, quote_ident, vector_literal_sql
 
 
 def score_by_dot(
     emb: DataFrame, query_vec: Sequence[float], vec_col: str = "embedding"
 ) -> DataFrame:
-    """Append a DOUBLE ``score`` = dot(vec_col, query_vec) to every row."""
-    qlit = F.array(*[F.lit(float(x)) for x in query_vec])
-    return emb.withColumn("score", dot_product(F.col(vec_col), qlit))
+    """Append a DOUBLE ``score`` = dot(vec_col, query_vec) to every row.
+
+    The column is one SQL expression: the :func:`dot_product` fold over the
+    query vector as one folded ``array<double>`` literal, so building it
+    costs the same handful of py4j calls at any dimension.  A row whose
+    vector length differs from the query's fails the query with an error
+    naming both lengths (zip_with would pad with nulls and score it
+    null); a null vector scores null.
+    """
+    n = len(query_vec)
+    v = quote_ident(vec_col)
+    return emb.withColumn("score", F.expr(
+        f"CASE WHEN {v} IS NOT NULL AND size({v}) <> {n} THEN raise_error("
+        f"concat('score_by_dot: query vector has {n} dimensions, ', "
+        f"'the vector column has ', CAST(size({v}) AS STRING))) "
+        f"ELSE {dot_sql(v, vector_literal_sql(query_vec))} END"
+    ))
 
 
 def knn_topk(

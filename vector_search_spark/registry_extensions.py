@@ -890,11 +890,11 @@ def q_jl_projection_distortion(spark: SparkSession, sf_dir: str) -> DataFrame:
     project the full corpus in the same scan that builds the index and
     audit distortion on this bounded pair sample.
     """
-    from .functions.vector import dot_product
+    from .functions.vector import dot_product, vector_literal
 
     emb = __load(spark, sf_dir, "embeddings").filter(F.col("vec_id") < JL_PAIR_IDS)
     proj_cols = [
-        dot_product("embedding", F.array(*[F.lit(x) for x in row])).alias(f"p{r}")
+        dot_product("embedding", vector_literal(row)).alias(f"p{r}")
         for r, row in enumerate(_JL_SIGNS)
     ]
     proj = emb.select("vec_id", "embedding", *proj_cols).localCheckpoint(eager=True)

@@ -13,14 +13,12 @@ from __future__ import annotations
 
 from pyspark.sql import SparkSession
 
+from .functions.vector import dot_sql
 from .sources.tables import register_views
 
 _SQL_FUNCTIONS = {
     # name -> (args, body)
-    "vss_dot": (
-        "a ARRAY<DOUBLE>, b ARRAY<DOUBLE>",
-        "aggregate(zip_with(a, b, (x, y) -> x * y), CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)",
-    ),
+    "vss_dot": ("a ARRAY<DOUBLE>, b ARRAY<DOUBLE>", dot_sql("a", "b")),
     "vss_norm": (
         "a ARRAY<DOUBLE>",
         "sqrt(aggregate(a, CAST(0.0 AS DOUBLE), (acc, v) -> acc + v * v))",
